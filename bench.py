@@ -81,15 +81,16 @@ def _scratch_dir() -> str:
 
 
 def _proc_group_cpu() -> "float | None":
-    """CPU-seconds (utime+stime) of every LIVE process in this process group
-    — the bench python driver, the py4j-launched JVM, and its python workers
-    all share the pgid. This is the measurement the scaling report's CPU
-    column makes its stall-vs-work argument with; RUSAGE_CHILDREN can NOT
-    provide it (the JVM is a grandchild the sub-run never waits on, so its
-    rusage never rolls up — the r5-200k study's CPU column measured only the
-    python driver). Caveat: CPU of processes that exited between two samples
-    is not seen; the JVM and (reused) python workers live across the dedup
-    window this brackets, so the delta is a floor within a few percent."""
+    """CPU-seconds (utime+stime) of this process's LIVE process tree — the
+    bench python driver, the py4j-launched JVM, the PySpark daemon and its
+    python workers, found by parent pid (each worker sits in a process group
+    of its own). This is the measurement the scaling report's CPU column
+    makes its stall-vs-work argument with; RUSAGE_CHILDREN can NOT provide it
+    (the JVM is a grandchild the sub-run never waits on, so its rusage never
+    rolls up — the r5-200k study's CPU column measured only the python
+    driver). Caveat: CPU of processes that exited between two samples is not
+    seen; the JVM and (reused) python workers live across the dedup window
+    this brackets, so the delta is a floor within a few percent."""
     from srpr_lsh_spark.hoststat import proc_group_cpu
 
     return proc_group_cpu()
@@ -275,7 +276,7 @@ def bench_once(sf_dir: str, cpus: int, n_clips: "int | None" = None,
             })
         cpu1 = _proc_group_cpu()
         if cpu0 is not None and cpu1 is not None:
-            # dedup-window CPU of the whole live process group (JVM + python
+            # dedup-window CPU of the whole live process tree (JVM + python
             # workers + driver), averaged per rep so it pairs with dedup_sec
             out["cpu_sec"] = round((cpu1 - cpu0) / max(1, bench_reps), 1)
         best = min(runs, key=lambda r: r["dedup_sec"])
@@ -287,7 +288,7 @@ def bench_once(sf_dir: str, cpus: int, n_clips: "int | None" = None,
         out["clips_per_sec"] = round(n_clips / best["dedup_sec"], 1)
         out["n_clusters"] = best["n_clusters"]
         out["stage_secs"] = best["stage_secs"]
-        # per-stage process-group CPU of the best rep (wall+CPU per stage at
+        # per-stage process-tree CPU of the best rep (wall+CPU per stage at
         # two parallelism levels = the per-stage stall-vs-work table the
         # scaling report prints)
         out["stage_cpu_secs"] = best["stage_cpu_secs"]
@@ -337,7 +338,7 @@ def _one_scaling_run(sf_dir: str, n_exec: "int | None", cores: int,
     # parallel speedup because the work serialized" from "because the socket
     # ran out of memory bandwidth" — equal CPU at both levels + longer wall
     # = stall time (VERDICT r4 #1). The sub-run measures its own process
-    # group via /proc (see _proc_group_cpu); the RUSAGE_CHILDREN delta here
+    # tree via /proc (see _proc_group_cpu); the RUSAGE_CHILDREN delta here
     # is only a /proc-less fallback (it misses the JVM grandchild entirely).
     import resource
 
@@ -354,7 +355,7 @@ def _one_scaling_run(sf_dir: str, n_exec: "int | None", cores: int,
         if l.startswith("{") and '"metric"' in l
     ][-1]
     out = json.loads(line)
-    # the sub-run's own /proc process-group measurement (JVM + workers) is
+    # the sub-run's own /proc process-tree measurement (JVM + workers) is
     # authoritative; the RUSAGE_CHILDREN delta only sees the python child
     # (the JVM is a grandchild that is never waited on) and remains as a
     # fallback for hosts without /proc
@@ -467,7 +468,7 @@ def _shape_section(s: dict) -> "list[str]":
         f"| {n_hi} | `{lvl(n_hi)}` | {s['t_hi']} | "
         f"{s['best'][n_hi]['clips_per_sec']} | {cpu(n_hi)} |",
         "",
-        "(CPU column = /proc process-group CPU-seconds across the dedup "
+        "(CPU column = /proc process-tree CPU-seconds across the dedup "
         "window, per rep: JVM + python workers + driver of the sub-run; "
         "equal CPU at both levels with sub-linear wall speedup = "
         "stall/bandwidth, not extra work.)",
@@ -490,7 +491,7 @@ def _shape_section(s: dict) -> "list[str]":
     for st, a, b_, sp, ca, cb in s["stage_rows"]:
         lines.append(f"| {st} | {a} | {b_} | {sp:.2f}× | {fmt(ca)} | {fmt(cb)} |")
     lines.append(
-        "\n(per-stage CPU = process-group CPU-seconds across that stage's "
+        "\n(per-stage CPU = process-tree CPU-seconds across that stage's "
         "wall window, best rep of each level. Flat CPU + sub-linear wall "
         "speedup = OFF-cpu waits: scheduling floors, page-fault/IO stalls. "
         "CPU inflated at the higher level = ON-cpu cycles the extra "

@@ -73,11 +73,12 @@ class DedupConfig:
     sim_bits: int = 40          # b per table
     fingerprint_dim: int = 32   # D — matches the reference embedding dim (main.cpp:62)
     cosine_threshold: float = 0.997  # exact-verify acceptance on fingerprints
-    # phase-1 fingerprint lookup: collected ONCE to a Python broadcast var and
-    # probed inside one mapInPandas (no per-branch BroadcastExchange builds —
-    # the round-3 scaling gap). Above this row count the stage falls back to
-    # the join-based plan (the 10¹²-clip path: sort-merge on bucketed
-    # signatures). 5M rows ≈ 0.9 GB payload at d=32 — a sane broadcast ceiling.
+    # phase-1 fingerprint lookup: collected ONCE on the driver, written as
+    # .npy files that workers memmap, and probed inside one mapInPandas (no
+    # per-branch BroadcastExchange builds — the round-3 scaling gap). Above
+    # this row count the stage falls back to the join-based plan (the
+    # 10¹²-clip path: sort-merge on bucketed signatures). 5M rows ≈ 0.9 GB of
+    # lookup files at d=32 — a sane single-node ship ceiling.
     fp_collect_max_rows: int = 5_000_000
     # ceiling for the text verify's driver-collected shingle-CSR lookup
     # (operators/verify.py::verify_text_pairs, r6): each row costs ~8 B per
@@ -85,21 +86,6 @@ class DedupConfig:
     # — the practical addFile/memmap bound. Beyond it the stage falls back to
     # the join plan (result-identical, parity-tested; the 10¹²-clip path).
     text_collect_max_rows: int = 2_000_000
-    # how the collected phase-1 lookup reaches workers. True (default): write
-    # .npy files, ship via sc.addFile, np.memmap in workers — ONE page-cache
-    # copy per node, no per-worker unpickle (the r5 fix for the
-    # process-isolated verify anti-scale: a Python broadcast is unpickled
-    # once PER WORKER PROCESS, GBs of duplicated RSS at 16 workers; see
-    # kernels/cosine.py::save_fp_lookup). False: classic Python broadcast.
-    # Result-identical either way (parity-tested).
-    fp_ship_files: bool = True
-    # below this many TOTAL candidate rows (warehouse manifest count — driver
-    # metadata, no job) the audio verify skips the broadcast ladder and runs
-    # the plain JVM-join phase-1 plan: the ladder's fixed costs (collect,
-    # broadcast build, spread shuffles) only pay for themselves on big
-    # candidate sets (measured: win at 200k clips, 2.4× loss at 20k —
-    # VERDICT r4 #2). Both plans are parity-tested equal.
-    verify_small_join_max_pairs: int = 400_000
     snr_db_threshold: float = 30.0   # decoded-PCM pair SNR acceptance (input_hint)
     # verify phase-3 decodes BOTH sides of each pair to float64 PCM; a full
     # 2048-row Arrow batch holds ~1.5 GB of decode temps per worker (and the
@@ -193,8 +179,6 @@ class DedupConfig:
         "containment_union_max_hashes",  # picks the index plan, never the result
         "fp_collect_max_rows",  # picks the phase-1 plan, never the result
         "text_collect_max_rows",  # picks the text-verify plan, never the result
-        "fp_ship_files",  # lookup transport, never the result
-        "verify_small_join_max_pairs",  # ditto
         "verify_decode_slice_rows",  # batch re-chunking, identical rows
         "signatures_chunks",  # chunk layout, identical rows
         "extra",

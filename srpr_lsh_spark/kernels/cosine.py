@@ -8,10 +8,10 @@ not shrink with cores (measured: verify stage speedup 1.04× at 4× cores,
 NOTES.md round-3 saga). On a real cluster the driver re-serializing the same
 lookup per plan branch is the coordinator bottleneck at every job.
 
-The replacement: collect the slim lookup ONCE on the driver, ship it ONCE as a
-Python broadcast variable, and evaluate phase 1 in a single ``mapInPandas``
-over the candidate frame — no joins, one build, and the per-worker unpickle is
-cached for the life of the worker process.
+The replacement: collect the slim lookup ONCE on the driver, write it ONCE as
+``.npy`` files (``save_fp_lookup``) that every worker memmaps
+(``load_fp_lookup_mmap``), and evaluate phase 1 in a single ``mapInPandas``
+over the candidate frame — no joins, one build, one page-cache copy per node.
 
 Two-tier evaluation inside the kernel (the int8 prefilter):
 
@@ -25,7 +25,7 @@ Two-tier evaluation inside the kernel (the int8 prefilter):
    partitioning-invariant). This is bit-compatible with the semantics of the
    previous JVM ``aggregate(zip_with(...))`` double-precision dot.
 
-Scale boundary: a Python broadcast of all fingerprints works to ~10⁷ clips
+Scale boundary: a shipped lookup of all fingerprints works to ~10⁷ clips
 (GBs); beyond ``DedupConfig.fp_collect_max_rows`` the verify stage falls back
 to the join-based plan, which is what a 10¹²-clip corpus needs anyway
 (sort-merge on a bucketed signatures table). The reference's analogue of this
@@ -40,22 +40,8 @@ import tempfile
 import uuid
 
 import numpy as np
-import pandas as pd
 
 _QSCALE = 127.0
-
-
-def build_fp_lookup(ids, fps: np.ndarray) -> dict:
-    """Driver-side: build the broadcast payload from the collected slim
-    ``(clip_id, fp)`` projection.
-
-    ``ids``: sequence of clip_id strings; ``fps``: (n, d) float32 (rows are
-    L2-normalized or all-zero). Returns dict with a hash index (id → row),
-    the float32 matrix, and the int8-quantized matrix."""
-    idx = pd.Index(np.asarray(ids, dtype=object))
-    fp = np.ascontiguousarray(fps, dtype=np.float32)
-    q = np.clip(np.rint(fp * _QSCALE), -_QSCALE, _QSCALE).astype(np.int8)
-    return {"index": idx, "fp": fp, "q": q}
 
 
 def save_fp_lookup(ids, fps: np.ndarray, out_dir: "str | None" = None):
@@ -123,11 +109,8 @@ def load_fp_lookup_mmap(prefix: str, get_path) -> dict:
 
 
 def _indexer(lookup: dict, ids) -> np.ndarray:
-    """id → row positions (−1 = absent), for either lookup flavor: the
-    in-memory broadcast dict (pandas hash index) or the memmapped file form
-    (binary search over the sorted fixed-width id array)."""
-    if "index" in lookup:
-        return lookup["index"].get_indexer(ids)
+    """id → row positions (−1 = absent): binary search over the memmapped
+    lookup's sorted fixed-width id array."""
     srt = lookup["ids_sorted"]
     n = len(srt)
     if n == 0:

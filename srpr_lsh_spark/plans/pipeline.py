@@ -108,7 +108,7 @@ def _run_dedup(
             out["skipped"].append(name)
         out["stage_secs"][name] = round(time.time() - t_mark, 2)
         t_mark = time.time()
-        # per-stage process-group CPU (driver + JVM + python workers): wall
+        # per-stage process-tree CPU (driver + JVM + python workers): wall
         # and CPU together attribute lost scaling — flat CPU + sub-linear
         # wall = off-cpu waits (scheduling/IO floors); inflated CPU = on-cpu
         # cycles that don't advance the job (spin, spill, DRAM-stall cycles,
@@ -211,14 +211,12 @@ def _run_dedup(
         return out
 
     audio_stats: dict = {}
-    # stage row counts from the warehouse manifests (parquet footer metadata,
-    # recorded at write time) — verify picks its phase-1 plan from these with
-    # ZERO extra driver actions (VERDICT r4 "what's wrong" #1: the old
-    # signatures.count() was one more serial job inside the stage)
+    # the signatures row count from its warehouse manifest (parquet footer
+    # metadata, recorded at write time) — verify checks its collect ceilings
+    # against it with ZERO extra driver actions (VERDICT r4 "what's wrong" #1:
+    # the old signatures.count() was one more serial job inside the stage)
     _m_sig = wh.manifest("signatures")
-    _m_cand = wh.manifest("candidates")
     n_sigs = _m_sig.get("rows") if _m_sig else None
-    n_cands = _m_cand.get("rows") if _m_cand else None
 
     def build_verified() -> DataFrame:
         # the four branches are independent until the union; the audio
@@ -232,7 +230,7 @@ def _run_dedup(
             return _pad(
                 verify_text_pairs(
                     cands.filter(F.col("source") == SOURCE_MINHASH), clips, cfg,
-                    n_candidates=n_cands, n_rows=n_sigs,
+                    n_rows=n_sigs,
                 )
             )
 
@@ -240,8 +238,7 @@ def _run_dedup(
             return _pad(
                 verify_audio_pairs(
                     cands.filter(F.col("source") == SOURCE_SIMHASH), clips, sigs,
-                    cfg, stats=audio_stats, n_candidates=n_cands,
-                    n_signatures=n_sigs,
+                    cfg, stats=audio_stats, n_signatures=n_sigs,
                 )
             )
 

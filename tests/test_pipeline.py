@@ -66,6 +66,15 @@ def test_exact_parity_canonical(result):
     assert _canon(got) == _canon(want)
 
 
+def test_candidate_funnel_recorded(result):
+    """The audio verify ladder records its candidate funnel at every scale,
+    this tiny corpus included."""
+    res, *_ = result
+    stats = res["verify_stats"]
+    assert stats["pairs_in"] > 0
+    assert 0 <= stats["int8_pass"] <= stats["pairs_in"]
+
+
 def test_lineage_written(result):
     res, *_ = result
     lin = res["warehouse"].lineage().toPandas()
@@ -195,9 +204,9 @@ def test_g711_reencode_dedups_against_pcm_original(spark, tmp_path):
     assert got["other"] != got["orig"]
 
 
-def test_phase1_join_fallback_matches_broadcast_plan(spark, tmp_path):
-    """The two phase-1 plans — python-broadcast lookup (below
-    fp_collect_max_rows) and the join-based beyond-broadcast-scale fallback —
+def test_phase1_join_fallback_matches_lookup_plan(spark, tmp_path):
+    """The two phase-1 plans — memmapped fp lookup (below
+    fp_collect_max_rows) and the join-based beyond-ceiling fallback —
     must verify the SAME pairs with the SAME cosines: the int8 prefilter is
     sound (margin bound), so plan choice can never change results."""
     import dataclasses
@@ -223,23 +232,21 @@ def test_phase1_join_fallback_matches_broadcast_plan(spark, tmp_path):
             for r in df.collect()
         )
 
-    got_files = rows(verify_audio_pairs(cands, clips, sigs, cfg))  # default: addFile+memmap
-    cfg_bcast = dataclasses.replace(cfg, fp_ship_files=False)      # python broadcast
-    got_bcast = rows(verify_audio_pairs(cands, clips, sigs, cfg_bcast))
+    got_lookup = rows(verify_audio_pairs(cands, clips, sigs, cfg))  # memmapped lookup
     cfg_join = dataclasses.replace(cfg, fp_collect_max_rows=0)  # force fallback
     got_join = rows(verify_audio_pairs(cands, clips, sigs, cfg_join))
-    assert got_files == got_bcast == got_join
-    assert len(got_files) > 0
+    assert got_lookup == got_join
+    assert len(got_lookup) > 0
     # plan knobs must not invalidate checkpoints (layout fields, not semantics)
-    assert cfg.config_hash() == cfg_join.config_hash() == cfg_bcast.config_hash()
+    assert cfg.config_hash() == cfg_join.config_hash()
 
 
 def test_text_lookup_plan_matches_join_plan(spark, tmp_path):
     """The two text-verify plans — memmapped shingle-CSR lookup (r6) and the
     transcript-join fallback — must verify the SAME pairs with the SAME
     jaccard values: the size-bound prefilter is exact (J ≤ min/max), so plan
-    choice can never change results. Also pins the gating: a small candidate
-    count or an over-ceiling corpus selects the join plan."""
+    choice can never change results. Also pins the gating: an over-ceiling
+    corpus selects the join plan."""
     import dataclasses
 
     from srpr_lsh_spark.operators.banding import SOURCE_MINHASH, space_candidates
@@ -262,26 +269,44 @@ def test_text_lookup_plan_matches_join_plan(spark, tmp_path):
         )
 
     got_join = rows(_verify_text_join(cands, clips, cfg))
-    # n_candidates above the small-join gate → lookup plan
-    got_lookup = rows(
-        verify_text_pairs(
-            cands, clips, cfg,
-            n_candidates=cfg.verify_small_join_max_pairs + 1, n_rows=n,
-        )
-    )
+    got_lookup = rows(verify_text_pairs(cands, clips, cfg, n_rows=n))
     assert got_lookup == got_join
     assert len(got_join) > 0
     # over-ceiling corpus falls back to the join plan, same rows
     cfg_big = dataclasses.replace(cfg, text_collect_max_rows=0)
-    got_fallback = rows(
-        verify_text_pairs(
-            cands, clips, cfg_big,
-            n_candidates=cfg.verify_small_join_max_pairs + 1, n_rows=n,
-        )
-    )
+    got_fallback = rows(verify_text_pairs(cands, clips, cfg_big, n_rows=n))
     assert got_fallback == got_join
     # the plan knob is a layout field: checkpoints stay valid across it
     assert cfg.config_hash() == cfg_big.config_hash()
+
+
+def test_lookup_sources_one_slot_per_kind(tmp_path, monkeypatch):
+    """Publishing a lookup deletes the previous run's source files of the
+    SAME kind only: the fp and text lookups are built concurrently by the
+    verified-pairs stage, so neither may delete the other's sources."""
+    import types
+
+    import numpy as np
+
+    from srpr_lsh_spark.kernels.cosine import save_fp_lookup
+    from srpr_lsh_spark.kernels.text import save_shingle_lookup
+    from srpr_lsh_spark.operators import verify
+
+    monkeypatch.setattr(verify, "_PREV_SOURCES", {})
+    sc = types.SimpleNamespace(master="local[1]", _temp_dir=str(tmp_path))
+    ids, fps = ["a", "b"], np.zeros((2, 4), dtype=np.float32)
+    flat, offsets = np.arange(3, dtype=np.int64), np.array([0, 1, 3])
+
+    def live(prefix):
+        return [f for d in ("fplk", "txlk") for f in os.listdir(tmp_path / d)
+                if f.startswith(prefix)]
+
+    fp1, _ = verify._publish_lookup(sc, "fplk", save_fp_lookup, ids, fps)
+    tx1, _ = verify._publish_lookup(sc, "txlk", save_shingle_lookup, ids, flat, offsets)
+    fp2, _ = verify._publish_lookup(sc, "fplk", save_fp_lookup, ids, fps)
+    assert live(fp1) == []
+    assert len(live(tx1)) == 3
+    assert len(live(fp2)) == 3
 
 
 def test_chunked_signatures_partition_resume(spark, tmp_path):

@@ -61,7 +61,7 @@ def main() -> int:
     from srpr_lsh_spark.operators.banding import SOURCE_SIMHASH
     from srpr_lsh_spark.operators.signatures import compute_signatures
     from srpr_lsh_spark.operators.substring import containment_candidates
-    from srpr_lsh_spark.operators.verify import _phase1_cosine_broadcast
+    from srpr_lsh_spark.operators.verify import _phase1_cosine_lookup
     from srpr_lsh_spark.plans.pipeline import run_dedup
     from srpr_lsh_spark.sources.synth import SynthParams, synthesize_clips
 
@@ -144,15 +144,13 @@ def main() -> int:
         rows.append(("containment index pruning", "_shingle_index", ok,
                      f"clips-scan schemas: {clip_scans[:1] or scans[:1]}"))
 
-        # 6: verify phase 1 is join-free (one python broadcast, zero
+        # 6: verify phase 1 is join-free (one memmapped lookup, zero
         # BroadcastExchange in the phase-1 sub-plan)
         from pyspark.sql import functions as F
 
         cands = res["candidates"].filter(F.col("source") == SOURCE_SIMHASH)
-        phase1, release = _phase1_cosine_broadcast(cands, sigs, cfg)
-        plan = _simple(phase1)
-        n_bx = plan.count("BroadcastExchange")
-        release()
+        phase1 = _phase1_cosine_lookup(cands, sigs, cfg)
+        n_bx = _simple(phase1).count("BroadcastExchange")
         ok = n_bx == 0
         rows.append(("verify phase-1 join-free", "audio verify", ok,
                      f"{n_bx}x BroadcastExchange in phase-1 sub-plan"))
