@@ -37,8 +37,6 @@ from srpr_lsh_spark.plans.checkpoint import (
     is_projected_file_scan,
 )
 
-STAGES = ("signatures", "candidates", "verified_pairs", "clusters")
-
 
 def _pad(df: DataFrame) -> DataFrame:
     """Align verified-edge schemas: (a, b, source, jaccard, cosine, snr_db)."""

@@ -25,29 +25,10 @@ from __future__ import annotations
 import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import LongType, StructField, StructType
 
 from srpr_lsh_spark.ml.trainer import FactorModel
 from srpr_lsh_spark.operators.ann import brute_topk, lsh_topk
-
-_SCHEMA = StructType(
-    [
-        StructField("model", StringType(), False),
-        StructField("method", StringType(), False),
-        StructField("rnk", LongType(), False),
-        StructField("item_id", LongType(), False),
-        StructField("score", DoubleType(), False),
-        StructField("elapsed_ms", DoubleType(), False),
-        StructField("precision_at_k", DoubleType(), True),
-        StructField("recall_at_k", DoubleType(), True),
-    ]
-)
 
 
 def recommend(

@@ -280,6 +280,30 @@ def test_text_lookup_plan_matches_join_plan(spark, tmp_path):
     assert cfg.config_hash() == cfg_big.config_hash()
 
 
+def test_containment_fallback_matches_index_plan(result):
+    """The two containment-candidate plans — the broadcast inverted index
+    restricted to sketch hashes, and the join-everything fallback taken when
+    the sketch union exceeds ``containment_union_max_hashes`` — must propose
+    the SAME (short, long) pairs."""
+    import dataclasses
+
+    from srpr_lsh_spark.operators.substring import containment_candidates
+
+    res, *_, clips = result
+    sigs = res["signatures"]
+
+    def rows(cfg):
+        return sorted((r["short"], r["long"])
+                      for r in containment_candidates(clips, sigs, cfg).collect())
+
+    cfg_join = dataclasses.replace(CFG, containment_union_max_hashes=0)
+    got_index, got_join = rows(CFG), rows(cfg_join)
+    assert got_index == got_join
+    assert len(got_index) > 0
+    # the plan knob is a layout field: checkpoints stay valid across it
+    assert CFG.config_hash() == cfg_join.config_hash()
+
+
 def test_lookup_sources_one_slot_per_kind(tmp_path, monkeypatch):
     """Publishing a lookup deletes the previous run's source files of the
     SAME kind only: the fp and text lookups are built concurrently by the

@@ -4,6 +4,9 @@
     python tools/plan_audit.py            # prints the six-row table, exits
                                           # non-zero if any check fails
 
+``run_checks(spark, sf_dir)`` runs the same checks on an existing session and
+returns the rows; ``tests/test_plan_audit.py`` calls it.
+
 Each check inspects the EXECUTED plan (post-AQE where applicable) of the same
 query PLANS.md documents, so the judge/CI can re-verify the plan claims
 without reading git history (VERDICT r4 #8). Runs at tiny scale — the checks
@@ -39,25 +42,12 @@ def _exchange_blocks(plan: str) -> "list[str]":
     return [b for b in blocks if re.match(r"\(\d+\) (Exchange|BroadcastExchange)", b.strip())]
 
 
-def main() -> int:
-    from pyspark.sql import SparkSession
-
-    from srpr_lsh_spark.config import DedupConfig, tune_allocator_env
-
-    tune_allocator_env()
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("plan-audit")
-        .config("spark.sql.shuffle.partitions", "16")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", "512m")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
+def run_checks(spark, sf_dir: str) -> "list[tuple[str, str, bool, str]]":
+    """Run the six checks on ``spark``; one ``(check, query, ok, detail)``
+    row per check. Checks 1-3 read the TPC-H tables under ``sf_dir``."""
     import __spark_entry__ as em
 
+    from srpr_lsh_spark.config import DedupConfig
     from srpr_lsh_spark.operators.banding import SOURCE_SIMHASH
     from srpr_lsh_spark.operators.signatures import compute_signatures
     from srpr_lsh_spark.operators.substring import containment_candidates
@@ -69,7 +59,7 @@ def main() -> int:
     rows: list[tuple[str, str, bool, str]] = []
 
     # 1 + 2: pricing_summary — pushdown + pruning ---------------------------
-    ps = qs["pricing_summary"](spark, SF_DIR)
+    ps = qs["pricing_summary"](spark, sf_dir)
     ps.write.format("noop").mode("overwrite").save()
     plan = _formatted(ps)
     pushed = re.search(r"PushedFilters: \[([^\]]*)\]", plan)
@@ -84,7 +74,7 @@ def main() -> int:
                  f"ReadSchema = {len(cols)} cols: {','.join(cols)}"))
 
     # 3: join_dims — both dims broadcast ------------------------------------
-    jd = qs["join_dims"](spark, SF_DIR)
+    jd = qs["join_dims"](spark, sf_dir)
     jd.write.format("noop").mode("overwrite").save()
     plan = _simple(jd)
     n_bhj = plan.count("BroadcastHashJoin")
@@ -154,6 +144,26 @@ def main() -> int:
         ok = n_bx == 0
         rows.append(("verify phase-1 join-free", "audio verify", ok,
                      f"{n_bx}x BroadcastExchange in phase-1 sub-plan"))
+    return rows
+
+
+def main() -> int:
+    from pyspark.sql import SparkSession
+
+    from srpr_lsh_spark.config import tune_allocator_env
+
+    tune_allocator_env()
+    spark = (
+        SparkSession.builder.master("local[8]")
+        .appName("plan-audit")
+        .config("spark.sql.shuffle.partitions", "16")
+        .config("spark.sql.adaptive.enabled", "true")
+        .config("spark.sql.autoBroadcastJoinThreshold", "512m")
+        .config("spark.ui.enabled", "false")
+        .getOrCreate()
+    )
+    spark.sparkContext.setLogLevel("ERROR")
+    rows = run_checks(spark, SF_DIR)
 
     width = max(len(r[0]) for r in rows)
     failures = 0
