@@ -235,7 +235,7 @@ def bench_once(sf_dir: str, cpus: int, n_clips: "int | None" = None,
     shuffle_partitions = shuffle_partitions or max(total_cores * 2, 8)
     spark = _session(cpus, shuffle_partitions, executors=executors)
     spark.sparkContext.setLogLevel("ERROR")
-    cfg = DedupConfig(shuffle_partitions=shuffle_partitions)
+    cfg = DedupConfig()
     tmp = tempfile.mkdtemp(prefix="srpr_bench_", dir=_scratch_dir())
     out: dict = {"sf": sf, "cpus": cpus, "n_clips": n_clips,
                  "executors": executors, "total_cores": total_cores}

@@ -12,7 +12,7 @@ from __future__ import annotations
 import hashlib
 import json
 import os
-from dataclasses import asdict, dataclass, field
+from dataclasses import asdict, dataclass
 
 
 def tune_allocator_env() -> None:
@@ -73,28 +73,7 @@ class DedupConfig:
     sim_bits: int = 40          # b per table
     fingerprint_dim: int = 32   # D — matches the reference embedding dim (main.cpp:62)
     cosine_threshold: float = 0.997  # exact-verify acceptance on fingerprints
-    # phase-1 fingerprint lookup: collected ONCE on the driver, written as
-    # .npy files that workers memmap, and probed inside one mapInPandas (no
-    # per-branch BroadcastExchange builds — the round-3 scaling gap). Above
-    # this row count the stage falls back to the join-based plan (the
-    # 10¹²-clip path: sort-merge on bucketed signatures). 5M rows ≈ 0.9 GB of
-    # lookup files at d=32 — a sane single-node ship ceiling.
-    fp_collect_max_rows: int = 5_000_000
-    # ceiling for the text verify's driver-collected shingle-CSR lookup
-    # (operators/verify.py::verify_text_pairs, r6): each row costs ~8 B per
-    # distinct shingle (~1-2 KB/row at transcript shapes), so 2M rows ≈ 2-4 GB
-    # — the practical addFile/memmap bound. Beyond it the stage falls back to
-    # the join plan (result-identical, parity-tested; the 10¹²-clip path).
-    text_collect_max_rows: int = 2_000_000
     snr_db_threshold: float = 30.0   # decoded-PCM pair SNR acceptance (input_hint)
-    # verify phase-3 decodes BOTH sides of each pair to float64 PCM; a full
-    # 2048-row Arrow batch holds ~1.5 GB of decode temps per worker (and the
-    # long-lived arena — tune_allocator_env — retains that high-water mark
-    # forever, which at 8-16 workers fed this host's reclaim storm in the r5
-    # 400k study). The UDF therefore re-chunks each incoming batch to this
-    # many rows: per-task memory stays bounded in CLIP SIZE, not row count —
-    # the property a 100 TB corpus with MB-scale clips needs anyway.
-    verify_decode_slice_rows: int = 192
     sketch_points: int = 512         # decimated-PCM sketch length (~1 ms stride)
     sketch_margin_db: float = 3.0    # sketch-SNR prefilter slack vs full check
     # --- substring (suffix-array) path ---
@@ -106,13 +85,6 @@ class DedupConfig:
                                 # ≥3 informative hashes on those rows)
     containment_min_matches: int = 3  # sketch-hash matches needed to form a candidate
     min_substr_shingles: int = 8     # ignore ultra-short transcripts for containment
-    # ceiling for the driver-collected distinct-sketch-hash set that
-    # pre-filters the containment inverted index (operators/substring.py,
-    # guide §3.2 manual semi-join pattern): |union| ≤ bottom_k·n_clips, but
-    # shared-vocabulary corpora collapse it far below that (measured 100k at
-    # 200k clips). 20M hashes ≈ 160 MB broadcast; beyond it the stage falls
-    # back to the join-based plan (result-identical, parity-tested).
-    containment_union_max_hashes: int = 20_000_000
     # --- skew handling (SURVEY.md §4.3.2) ---
     # buckets larger than this use two-anchor star pairing, not all-pairs.
     # Recall trade (measured, tests/test_components.py::
@@ -124,17 +96,12 @@ class DedupConfig:
     # recall at O(bucket²) cost; at 10¹² clips keep it low and rely on L.
     bucket_pair_cap: int = 64
     hot_shingle_cap: int = 128  # drop bottom-k sketch hashes shared by more rows than this
-    # signatures-stage chunking for partition-granularity resume (>1 splits
-    # the input FILE LIST into this many groups, each written + manifested
-    # independently — a failed run resumes re-reading only incomplete
-    # chunks' files). Requires clips to be an unfiltered file scan; 1 = the
-    # single-snapshot stage (default). Layout-only: same rows either way.
-    signatures_chunks: int = 1
     # --- determinism ---
     seed: int = 42              # reference seed discipline: lsh.h:80, MatrixFactorization.h:44
     # --- layout ---
+    # read by nothing in the package; kept only because the benchmark's
+    # workload configs still pass it (see ROADMAP carried items)
     shuffle_partitions: int = 32
-    cc_max_iters: int = 25
     # input split size for the decode/signature scan: audio rows are wide, the
     # UDF is CPU-bound, so splits should be small enough to use every core
     # (bytes are NEVER shuffled to fix parallelism — SURVEY §7.3.5)
@@ -147,10 +114,9 @@ class DedupConfig:
     # work per stage wave on any executor shape (measured: candidate_pairs
     # 10.0→6.7 s at 32 cores). 8 MB keeps partition count near the configured
     # ceiling for these stages without creating more partitions than
-    # shuffle_partitions anywhere (AQE only coalesces DOWN). On a real
-    # cluster size it to (per-core work quantum × rows/byte), not to 64 MB.
+    # spark.sql.shuffle.partitions anywhere (AQE only coalesces DOWN). On a
+    # real cluster size it to (per-core work quantum × rows/byte), not 64 MB.
     aqe_advisory_bytes: int = 8 << 20
-    extra: dict = field(default_factory=dict, compare=False)
 
     def __post_init__(self) -> None:
         if self.n_perm != self.bands * self.rows:
@@ -173,15 +139,8 @@ class DedupConfig:
     # invalidate checkpoints (outputs are partitioning-invariant by design)
     _LAYOUT_FIELDS = (
         "shuffle_partitions",
-        "cc_max_iters",
         "input_split_bytes",
         "aqe_advisory_bytes",  # post-shuffle layout, never the result
-        "containment_union_max_hashes",  # picks the index plan, never the result
-        "fp_collect_max_rows",  # picks the phase-1 plan, never the result
-        "text_collect_max_rows",  # picks the text-verify plan, never the result
-        "verify_decode_slice_rows",  # batch re-chunking, identical rows
-        "signatures_chunks",  # chunk layout, identical rows
-        "extra",
     )
 
     def config_hash(self) -> str:

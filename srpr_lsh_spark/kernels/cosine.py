@@ -26,8 +26,8 @@ Two-tier evaluation inside the kernel (the int8 prefilter):
    previous JVM ``aggregate(zip_with(...))`` double-precision dot.
 
 Scale boundary: a shipped lookup of all fingerprints works to ~10⁷ clips
-(GBs); beyond ``DedupConfig.fp_collect_max_rows`` the verify stage falls back
-to the join-based plan, which is what a 10¹²-clip corpus needs anyway
+(GBs); beyond ``operators.verify.FP_COLLECT_MAX_ROWS`` the verify stage falls
+back to the join-based plan, which is what a 10¹²-clip corpus needs anyway
 (sort-merge on a bucketed signatures table). The reference's analogue of this
 whole stage is the exact-cosine re-rank over LSH candidates
 (``src/lsh.h:132-145``); the zero-magnitude guard mirrors ``src/lsh.h:151-155``.

@@ -75,6 +75,15 @@ def _shingle_df_counts(clips: DataFrame, cfg: DedupConfig) -> DataFrame:
     return clips.select("transcript").mapInPandas(gen, schema=schema)
 
 
+# ceiling for the driver-collected distinct-sketch-hash set that pre-filters
+# the containment inverted index (guide §3.2 manual semi-join pattern):
+# |union| ≤ bottom_k·n_clips, but shared-vocabulary corpora collapse it far
+# below that (measured 100k at 200k clips). 20M hashes ≈ 160 MB broadcast;
+# beyond it the stage falls back to the join-based plan (result-identical,
+# parity-tested).
+CONTAINMENT_UNION_MAX_HASHES = 20_000_000
+
+
 def containment_candidates(
     clips: DataFrame, signatures: DataFrame, cfg: DedupConfig
 ) -> DataFrame:
@@ -93,7 +102,7 @@ def containment_candidates(
     banding subgraph. Restricting the index by hash VALUE changes no df
     count and no match count, so the output is row-identical to the
     unrestricted plan (pytest-pinned). Corpora whose sketch union exceeds
-    ``cfg.containment_union_max_hashes`` (the broadcast ceiling, guide §3.2)
+    ``CONTAINMENT_UNION_MAX_HASHES`` (the broadcast ceiling, guide §3.2)
     fall back to the former join-everything plan."""
     eligible = signatures.filter(F.col("n_shingles") >= cfg.min_substr_shingles)
     sketch = eligible.select(
@@ -108,7 +117,7 @@ def containment_candidates(
 
     # one small sketch-side job gates the broadcast plan (no transcript scan)
     n_union = sketch.select("h").distinct().count()
-    if n_union > cfg.containment_union_max_hashes:
+    if n_union > CONTAINMENT_UNION_MAX_HASHES:
         # fallback: the former join-everything plan (sketch union too large
         # to broadcast — guide §3.2's cost caveat)
         index = _shingle_index(clips, cfg)

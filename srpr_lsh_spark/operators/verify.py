@@ -143,6 +143,14 @@ def _collect_shingle_csr(clips: DataFrame, cfg: DedupConfig):
     return ids, flat, offsets
 
 
+# ceiling for the text verify's driver-collected shingle-CSR lookup (r6):
+# each row costs ~8 B per distinct shingle (~1-2 KB/row at transcript
+# shapes), so 2M rows ≈ 2-4 GB — the practical addFile/memmap bound. Beyond
+# it the stage falls back to the join plan (result-identical, parity-tested;
+# the 10¹²-clip path).
+TEXT_COLLECT_MAX_ROWS = 2_000_000
+
+
 def verify_text_pairs(
     pairs: DataFrame, clips: DataFrame, cfg: DedupConfig,
     n_rows: "int | None" = None,
@@ -153,7 +161,7 @@ def verify_text_pairs(
     the signatures manifest inside the pipeline; one ``clips.count()``
     otherwise):
 
-    - while the corpus fits ``cfg.text_collect_max_rows``, each distinct
+    - while the corpus fits ``TEXT_COLLECT_MAX_ROWS``, each distinct
       doc is shingled ONCE by a distributed kernel pass, the CSR is written
       as ``.npy`` files that workers memmap, and the pair UDF probes it with
       an exact size-bound prefilter — no transcript joins, no per-pair
@@ -164,7 +172,7 @@ def verify_text_pairs(
     same float64 division, same inner-join id semantics."""
     if n_rows is None:
         n_rows = clips.count()
-    if n_rows > cfg.text_collect_max_rows:
+    if n_rows > TEXT_COLLECT_MAX_ROWS:
         return _verify_text_join(pairs, clips, cfg)
 
     from srpr_lsh_spark.kernels.text import (
@@ -354,7 +362,7 @@ def _phase1_cosine_join(
     """Join-based phase 1 — the beyond-collect-ceiling path (fingerprint side
     too big to collect): two equi-joins attach fp rows, the dot runs JVM-side
     in whole-stage codegen. At 10¹² clips these become sort-merge joins on a
-    bucketed signatures table; below ``fp_collect_max_rows`` the lookup
+    bucketed signatures table; below ``FP_COLLECT_MAX_ROWS`` the lookup
     kernel above is strictly better (one build vs 3+, NOTES.md round-3 saga).
     Fingerprints are L2-normalized at creation; a zero vector (silence) gives
     dot = 0.0 — NOT null — so such pairs are dropped only because
@@ -374,6 +382,24 @@ def _phase1_cosine_join(
         .filter(F.col("cosine") >= cfg.cosine_threshold)
         .select("a", "b", "source", "cosine")
     )
+
+
+# phase-1 fingerprint lookup: collected ONCE on the driver, written as .npy
+# files that workers memmap, and probed inside one mapInPandas (no per-branch
+# BroadcastExchange builds — the round-3 scaling gap). Above this row count
+# the stage falls back to the join-based plan (the 10¹²-clip path:
+# sort-merge on bucketed signatures). 5M rows ≈ 0.9 GB of lookup files at
+# d=32 — a sane single-node ship ceiling.
+FP_COLLECT_MAX_ROWS = 5_000_000
+
+# phase 3 decodes BOTH sides of each pair to float64 PCM; a full 2048-row
+# Arrow batch holds ~1.5 GB of decode temps per worker (and the long-lived
+# arena — tune_allocator_env — retains that high-water mark forever, which
+# at 8-16 workers fed this host's reclaim storm in the r5 400k study). The
+# UDF therefore re-chunks each incoming batch to this many rows: per-task
+# memory stays bounded in CLIP SIZE, not row count — the property a 100 TB
+# corpus with MB-scale clips needs anyway.
+VERIFY_DECODE_SLICE_ROWS = 192
 
 
 def verify_audio_pairs(
@@ -400,7 +426,7 @@ def verify_audio_pairs(
     ``n_signatures`` is the driver-known signatures row count (the pipeline
     threads it in from the Warehouse stage manifest — parquet footer
     metadata, zero Spark jobs). It picks the phase-1 plan: the memmapped
-    lookup while it fits the collect ceiling (``cfg.fp_collect_max_rows``),
+    lookup while it fits the collect ceiling (``FP_COLLECT_MAX_ROWS``),
     the join plan beyond it (the 10¹²-clip path); both are parity-tested
     equal. When the count isn't supplied (standalone use), one
     ``signatures.count()`` decides — inside the pipeline that action never
@@ -416,7 +442,7 @@ def verify_audio_pairs(
 
     if n_signatures is None:
         n_signatures = signatures.count()
-    if n_signatures <= cfg.fp_collect_max_rows:
+    if n_signatures <= FP_COLLECT_MAX_ROWS:
         phase1 = _phase1_cosine_lookup(_spread(pairs), signatures, cfg, stats=stats)
     else:
         phase1 = _phase1_cosine_join(pairs, signatures, cfg)
@@ -479,7 +505,6 @@ def verify_audio_pairs(
     withb = _attach(withb, blobs, {"bytes": "bb", "codec": "cb"}, "b",
                     shrink=False)
     snr_thr = cfg.snr_db_threshold
-    slice_rows = max(1, cfg.verify_decode_slice_rows)
 
     schema = StructType(
         [
@@ -497,10 +522,10 @@ def verify_audio_pairs(
             # Re-chunk the Arrow batch: both sides decode to float64 PCM, so
             # a full 2048-row batch peaks at ~1.5 GB of temps per worker (and
             # the worker's arena keeps that high-water forever —
-            # cfg.verify_decode_slice_rows rationale). Slicing bounds the
+            # VERIFY_DECODE_SLICE_ROWS rationale). Slicing bounds the
             # peak without changing any output row.
-            for start in range(0, len(full), slice_rows):
-                pdf = full.iloc[start : start + slice_rows]
+            for start in range(0, len(full), VERIFY_DECODE_SLICE_ROWS):
+                pdf = full.iloc[start : start + VERIFY_DECODE_SLICE_ROWS]
                 if not len(pdf):
                     continue
                 # decode is per-row (one frombuffer per blob — no per-sample

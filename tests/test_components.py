@@ -1,8 +1,6 @@
 """Connected components vs a union-find oracle on random graphs, plus the
 adversarial over-cap star-bucket fixture (VERDICT r1 #8)."""
 
-import dataclasses
-
 import numpy as np
 import pytest
 
@@ -93,7 +91,7 @@ class TestOverCapStarBucket:
         from srpr_lsh_spark.config import DedupConfig
         from srpr_lsh_spark.operators.banding import candidate_pairs
 
-        cfg = dataclasses.replace(DedupConfig(shuffle_partitions=8), bucket_pair_cap=cap)
+        cfg = DedupConfig(bucket_pair_cap=cap)
         bands = spark.createDataFrame(
             [(i, 0, 42, "minhash") for i in self.IDS],
             ["clip_id", "band_id", "band_hash", "source"],
@@ -175,8 +173,7 @@ class TestOverCapDisjointFamilies:
         from srpr_lsh_spark.config import DedupConfig
         from srpr_lsh_spark.operators.banding import candidate_pairs
 
-        cfg = dataclasses.replace(DedupConfig(shuffle_partitions=8),
-                                  bucket_pair_cap=cap)
+        cfg = DedupConfig(bucket_pair_cap=cap)
         ids = self._ids()
         bands = spark.createDataFrame(
             [(i, 0, 7, "simhash") for i in ids],

@@ -11,7 +11,7 @@ from srpr_lsh_spark.config import DedupConfig
 from srpr_lsh_spark.plans.pipeline import run_dedup
 from srpr_lsh_spark.sources.synth import SynthParams, synthesize_clips
 
-CFG = DedupConfig(shuffle_partitions=8)
+CFG = DedupConfig()
 PARAMS = SynthParams(n_clips=600, block_size=200, seed=42, min_dur_ms=300, max_dur_ms=1500)
 
 
@@ -108,7 +108,7 @@ def test_resume_after_partial_run(spark, tmp_path):
     sig_manifest2 = json.load(open(os.path.join(wdir, "signatures._manifest.json")))
     assert sig_manifest["run_id"] == sig_manifest2["run_id"]  # untouched on disk
     # and a config change invalidates resume
-    cfg2 = DedupConfig(shuffle_partitions=8, jaccard_threshold=0.85)
+    cfg2 = DedupConfig(jaccard_threshold=0.85)
     res3 = run_dedup(spark, clips, cfg2, warehouse_dir=wdir, stop_after="signatures")
     assert res3["skipped"] == []
 
@@ -137,12 +137,11 @@ def test_parallelism_invariance(spark, tmp_path):
     clips, _ = synthesize_clips(spark, params, out_dir=str(tmp_path / "d"))
     outs = []
     for i, parts in enumerate((3, 13)):
-        cfg = DedupConfig(shuffle_partitions=parts)
         old = spark.conf.get("spark.sql.shuffle.partitions")
         spark.conf.set("spark.sql.shuffle.partitions", str(parts))
         try:
             res = run_dedup(
-                spark, clips.repartition(parts), cfg,
+                spark, clips.repartition(parts), CFG,
                 warehouse_dir=str(tmp_path / f"wh{i}"), resume=False,
             )
             outs.append(
@@ -204,18 +203,14 @@ def test_g711_reencode_dedups_against_pcm_original(spark, tmp_path):
     assert got["other"] != got["orig"]
 
 
-def test_phase1_join_fallback_matches_lookup_plan(spark, tmp_path):
+def test_phase1_join_fallback_matches_lookup_plan(spark, tmp_path, monkeypatch):
     """The two phase-1 plans — memmapped fp lookup (below
-    fp_collect_max_rows) and the join-based beyond-ceiling fallback —
+    FP_COLLECT_MAX_ROWS) and the join-based beyond-ceiling fallback —
     must verify the SAME pairs with the SAME cosines: the int8 prefilter is
     sound (margin bound), so plan choice can never change results."""
-    import dataclasses
-
-    from pyspark.sql import functions as F
-
+    from srpr_lsh_spark.operators import verify
     from srpr_lsh_spark.operators.banding import SOURCE_SIMHASH, space_candidates
     from srpr_lsh_spark.operators.signatures import compute_signatures
-    from srpr_lsh_spark.operators.verify import verify_audio_pairs
 
     clips, _ = synthesize_clips(
         spark,
@@ -232,23 +227,20 @@ def test_phase1_join_fallback_matches_lookup_plan(spark, tmp_path):
             for r in df.collect()
         )
 
-    got_lookup = rows(verify_audio_pairs(cands, clips, sigs, cfg))  # memmapped lookup
-    cfg_join = dataclasses.replace(cfg, fp_collect_max_rows=0)  # force fallback
-    got_join = rows(verify_audio_pairs(cands, clips, sigs, cfg_join))
+    got_lookup = rows(verify.verify_audio_pairs(cands, clips, sigs, cfg))
+    monkeypatch.setattr(verify, "FP_COLLECT_MAX_ROWS", 0)  # force fallback
+    got_join = rows(verify.verify_audio_pairs(cands, clips, sigs, cfg))
     assert got_lookup == got_join
     assert len(got_lookup) > 0
-    # plan knobs must not invalidate checkpoints (layout fields, not semantics)
-    assert cfg.config_hash() == cfg_join.config_hash()
 
 
-def test_text_lookup_plan_matches_join_plan(spark, tmp_path):
+def test_text_lookup_plan_matches_join_plan(spark, tmp_path, monkeypatch):
     """The two text-verify plans — memmapped shingle-CSR lookup (r6) and the
     transcript-join fallback — must verify the SAME pairs with the SAME
     jaccard values: the size-bound prefilter is exact (J ≤ min/max), so plan
     choice can never change results. Also pins the gating: an over-ceiling
     corpus selects the join plan."""
-    import dataclasses
-
+    from srpr_lsh_spark.operators import verify
     from srpr_lsh_spark.operators.banding import SOURCE_MINHASH, space_candidates
     from srpr_lsh_spark.operators.signatures import compute_signatures
     from srpr_lsh_spark.operators.verify import _verify_text_join, verify_text_pairs
@@ -273,35 +265,30 @@ def test_text_lookup_plan_matches_join_plan(spark, tmp_path):
     assert got_lookup == got_join
     assert len(got_join) > 0
     # over-ceiling corpus falls back to the join plan, same rows
-    cfg_big = dataclasses.replace(cfg, text_collect_max_rows=0)
-    got_fallback = rows(verify_text_pairs(cands, clips, cfg_big, n_rows=n))
+    monkeypatch.setattr(verify, "TEXT_COLLECT_MAX_ROWS", 0)
+    got_fallback = rows(verify_text_pairs(cands, clips, cfg, n_rows=n))
     assert got_fallback == got_join
-    # the plan knob is a layout field: checkpoints stay valid across it
-    assert cfg.config_hash() == cfg_big.config_hash()
 
 
-def test_containment_fallback_matches_index_plan(result):
+def test_containment_fallback_matches_index_plan(result, monkeypatch):
     """The two containment-candidate plans — the broadcast inverted index
     restricted to sketch hashes, and the join-everything fallback taken when
-    the sketch union exceeds ``containment_union_max_hashes`` — must propose
+    the sketch union exceeds ``CONTAINMENT_UNION_MAX_HASHES`` — must propose
     the SAME (short, long) pairs."""
-    import dataclasses
-
-    from srpr_lsh_spark.operators.substring import containment_candidates
+    from srpr_lsh_spark.operators import substring
 
     res, *_, clips = result
     sigs = res["signatures"]
 
-    def rows(cfg):
-        return sorted((r["short"], r["long"])
-                      for r in containment_candidates(clips, sigs, cfg).collect())
+    def rows():
+        return sorted((r["short"], r["long"]) for r in
+                      substring.containment_candidates(clips, sigs, CFG).collect())
 
-    cfg_join = dataclasses.replace(CFG, containment_union_max_hashes=0)
-    got_index, got_join = rows(CFG), rows(cfg_join)
+    got_index = rows()
+    monkeypatch.setattr(substring, "CONTAINMENT_UNION_MAX_HASHES", 0)
+    got_join = rows()
     assert got_index == got_join
     assert len(got_index) > 0
-    # the plan knob is a layout field: checkpoints stay valid across it
-    assert CFG.config_hash() == cfg_join.config_hash()
 
 
 def test_lookup_sources_one_slot_per_kind(tmp_path, monkeypatch):
@@ -333,84 +320,12 @@ def test_lookup_sources_one_slot_per_kind(tmp_path, monkeypatch):
     assert len(live(fp2)) == 3
 
 
-def test_chunked_signatures_partition_resume(spark, tmp_path):
-    """Partition-granularity resume for the expensive scan (SURVEY §4.3.5 /
-    VERDICT r4 #7): with signatures_chunks=4, each chunk of the input FILE
-    LIST writes + manifests independently. Simulate a crash that lost one
-    chunk (its manifest + data deleted, parent manifest absent): the rerun
-    must recompute ONLY that chunk — the other three keep their run_ids —
-    and the final signatures must equal the single-snapshot stage's rows."""
-    import dataclasses
-    import shutil
-
-    params = SynthParams(n_clips=400, block_size=50, seed=44,
-                         min_dur_ms=300, max_dur_ms=800)
-    clips, _ = synthesize_clips(spark, params, out_dir=str(tmp_path / "d"))
-    assert len(clips.inputFiles()) >= 4, "fixture needs >=4 input files"
-    cfg = dataclasses.replace(CFG, signatures_chunks=4)
-    wdir = str(tmp_path / "wh")
-
-    res = run_dedup(spark, clips, cfg, warehouse_dir=wdir, stop_after="signatures")
-    assert res["signature_chunks_skipped"] == []
-    sig_rows = sorted(
-        (r["clip_id"], r["content_key"]) for r in
-        res["signatures"].select("clip_id", "content_key").collect()
-    )
-
-    # single-snapshot parity: chunking is layout-only
-    res_plain = run_dedup(spark, clips, CFG, warehouse_dir=str(tmp_path / "wh2"),
-                          stop_after="signatures")
-    plain_rows = sorted(
-        (r["clip_id"], r["content_key"]) for r in
-        res_plain["signatures"].select("clip_id", "content_key").collect()
-    )
-    assert sig_rows == plain_rows
-
-    # simulate the crash: chunk 2 torn away, parent manifest gone
-    os.remove(os.path.join(wdir, "signatures.chunk-00002._manifest.json"))
-    shutil.rmtree(os.path.join(wdir, "signatures", "chunk-00002"))
-    os.remove(os.path.join(wdir, "signatures._manifest.json"))
-    before = {
-        i: json.load(open(os.path.join(
-            wdir, f"signatures.chunk-{i:05d}._manifest.json")))["run_id"]
-        for i in (0, 1, 3)
-    }
-
-    res2 = run_dedup(spark, clips, cfg, warehouse_dir=wdir, stop_after="signatures")
-    assert sorted(res2["signature_chunks_skipped"]) == [0, 1, 3]
-    after = {
-        i: json.load(open(os.path.join(
-            wdir, f"signatures.chunk-{i:05d}._manifest.json")))["run_id"]
-        for i in (0, 1, 3)
-    }
-    assert before == after  # untouched on disk
-    sig_rows2 = sorted(
-        (r["clip_id"], r["content_key"]) for r in
-        res2["signatures"].select("clip_id", "content_key").collect()
-    )
-    assert sig_rows2 == sig_rows
-
-    # and a fully-complete chunked stage skips wholesale on the next run
-    res3 = run_dedup(spark, clips, cfg, warehouse_dir=wdir, stop_after="signatures")
-    assert sorted(res3["signature_chunks_skipped"]) == [0, 1, 2, 3]
-    assert "signatures" in res3["skipped"]
-
-    # chunk lineage rows carry the chunk input's footer row counts (r5
-    # VERDICT #6: chunked stages meet the per-partition lineage rule too)
-    lin = res3["warehouse"].lineage().filter("stage like 'signatures/chunk-%'")
-    assert lin.count() > 0
-    assert lin.filter("rows_in IS NULL").count() == 0
-
-
-def test_chunked_signatures_rejects_transformed_input(spark, tmp_path):
-    """The chunked rebuild re-reads raw FILES, so a filter on the input frame
-    would be silently dropped. r5 VERDICT #1: that precondition is now a
-    guard, not a docstring — a filtered input must (a) fall back to the
-    single-snapshot stage, (b) produce signatures honoring the filter, and
-    (c) get a DIFFERENT resume fingerprint than the bare scan over the same
-    files (so warehouses can never cross-serve stale stages)."""
-    import dataclasses
-
+def test_transformed_input_gets_own_fingerprint(spark, tmp_path):
+    """Resume keys fold in the plan of any input that is not a bare file
+    scan (r5 VERDICT #1): a filtered frame over the same files must get a
+    DIFFERENT fingerprint (so warehouses can never cross-serve stale
+    stages), an attribute-only projection keeps the bare scan's, and the
+    signatures of a filtered input honour the filter."""
     from pyspark.sql import functions as F
 
     from srpr_lsh_spark.plans.checkpoint import (
@@ -426,12 +341,12 @@ def test_chunked_signatures_rejects_transformed_input(spark, tmp_path):
     assert not is_projected_file_scan(filtered)
     assert input_fingerprint(clips) != input_fingerprint(filtered)
     # attribute-only projection is still a bare scan (shares the stage key)
-    assert is_projected_file_scan(clips.select(*clips.columns))
+    projected = clips.select(*clips.columns)
+    assert is_projected_file_scan(projected)
+    assert input_fingerprint(projected) == input_fingerprint(clips)
 
-    cfg = dataclasses.replace(CFG, signatures_chunks=4)
-    res = run_dedup(spark, filtered, cfg, warehouse_dir=str(tmp_path / "wh"),
+    res = run_dedup(spark, filtered, CFG, warehouse_dir=str(tmp_path / "wh"),
                     stop_after="signatures")
-    assert "signature_chunks_skipped" not in res  # single-snapshot fallback
     n_filtered = filtered.count()
     assert res["signatures"].count() == n_filtered
     assert n_filtered < clips.count()

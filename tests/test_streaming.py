@@ -10,7 +10,7 @@ from srpr_lsh_spark.config import DedupConfig
 from srpr_lsh_spark.sources.synth import SynthParams, synthesize_clips
 from srpr_lsh_spark.streaming.ingest import stream_signatures, windowed_event_rollup
 
-CFG = DedupConfig(shuffle_partitions=8)
+CFG = DedupConfig()
 
 
 def test_incremental_signature_ingest(spark, tmp_path):

@@ -15,8 +15,7 @@ BASELINE.json input_hint schema — (clip_id string, bytes binary, sr_hz int,
 dur_ms int, codec string, transcript string). Output: (clip_id, cluster_id)
 parquet. The warehouse directory holds every stage's checkpoint + lineage;
 rerunning the same command after a failure resumes from the last complete
-stage (chunk-granular for the signatures stage), per the north_rule's
-"resumable from checkpoint" requirement.
+stage, per the north_rule's "resumable from checkpoint" requirement.
 
 Exit is a single JSON line on stdout with stage wall-times, cluster count,
 and the resume decision per stage — machine-consumable, mirroring
@@ -66,7 +65,7 @@ def main(argv=None) -> int:
     ap.add_argument("--conf", action="append", default=[],
                     metavar="KEY=VALUE",
                     help="DedupConfig field override, repeatable "
-                         "(e.g. --conf minhash_perms=128)")
+                         "(e.g. --conf jaccard_threshold=0.85)")
     ap.add_argument("--make-pyfiles-zip", metavar="OUT_ZIP",
                     help="write the --py-files package zip and exit "
                          "(run locally, before spark-submit)")

@@ -88,7 +88,7 @@ def run_checks(spark, sf_dir: str) -> "list[tuple[str, str, bool, str]]":
         params = SynthParams(n_clips=400, block_size=100, seed=42,
                              min_dur_ms=300, max_dur_ms=900)
         clips, _ = synthesize_clips(spark, params, out_dir=f"{tmp}/data")
-        cfg = DedupConfig(shuffle_partitions=16)
+        cfg = DedupConfig()
         res = run_dedup(spark, clips, cfg, warehouse_dir=f"{tmp}/wh",
                         resume=False, stop_after="candidates")
 
